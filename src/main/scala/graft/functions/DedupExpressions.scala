@@ -170,6 +170,9 @@ case class MinhashBandHashes(child: Expression, bands: Int) extends UnaryExpress
   * family, kept inside whole-stage codegen.
   */
 case class PassageFps(child: Expression, w: Int) extends UnaryExpression {
+  // w <= 0 would index out of bounds (w < 0) or emit n+1 garbage
+  // fingerprints (w = 0) inside the kernel
+  require(w > 0, "w > 0")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any =

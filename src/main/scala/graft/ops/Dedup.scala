@@ -823,13 +823,15 @@ object Dedup {
     * fingerprints its materialized strings in the broadcast projection.
     * A 64-bit collision between two distinct shared n-grams of one
     * (doc, eval) pair could in principle lower shared_ngrams by one —
-    * probability ~2⁻⁶⁴ per pair of shared n-grams, and the DuckDB oracle
-    * (which replays the same fingerprint arithmetic in hugeint) verifies
-    * exact equality on the gate corpora.
+    * probability ~2⁻⁶⁴ per pair of shared n-grams. The DuckDB oracle does
+    * NOT replay the fingerprints: q_contamination counts DISTINCT n-gram
+    * strings, so its exact equality on the gate corpora shows that no
+    * such collision occurs there.
     */
   def ngramContaminationAgainst(corpus: DataFrame, evalNgrams: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
       minShared: Int = 1): DataFrame = {
+    require(n > 0, "n > 0")
     val evalFps = evalNgrams.select(col("eval_id"),
       graft.functions.GraftFunctions.fingerprint64(col("ngram")).as("fp"))
     corpus.select(col(idCol).cast("long").as("doc_id"),
@@ -924,163 +926,49 @@ object Dedup {
       .toDF("doc_id", "pos", "fp")
   }
 
-  /** Duplicated passages: every window whose fingerprint occurs at least
-    * twice in the corpus (within OR across docs). Returns (doc_id, pos,
-    * fp, n_occurrences), unsorted (operator contract — consumers join).
-    *
-    * Scale shape (100 TB): ONE hash exchange keyed by the fingerprint,
-    * carrying (fp 8 B, doc_id 8 B, pos 4 B) per token — O(corpus tokens ×
-    * 20 B) on the wire, which is the honest cost of stride-1 exact passage
-    * detection (the suffix-array formulation is single-machine; windowed
-    * fingerprints are its distributable equivalent). The window text
-    * itself NEVER shuffles — only the 8-byte fingerprint — and the count
-    * is a window aggregate over that one exchange (the q_dedup_keep
-    * shape: no second join, no broadcast of an unbounded set). Run it
-    * AFTER doc-level dedup so exact-duplicate documents don't multiply
-    * the token stream.
-    */
+  /** [[FingerprintScreen.duplicates]] over `w`-token passages. */
   def duplicatePassages(spark: SparkSession, df: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame = {
-    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    passageFingerprints(df, idCol, textCol, w)
-      .withColumn("n_occurrences", count(lit(1)).over(byFp))
-      .filter(col("n_occurrences") >= 2)
-  }
+      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
+    FingerprintScreen.duplicates(Passage(w), df, idCol, textCol)
 
-  /** Repeated-passage dedup APPLIED at doc granularity: for every
-    * duplicated fingerprint the CANONICAL occurrence is the lexicographic
-    * min (doc_id, pos); a doc owning at least `minDupWindows`
-    * non-canonical occurrences is dropped. Keep-first semantics at the
-    * passage level — the doc holding a passage's first occurrence
-    * survives, later docs built from already-seen passages go (a doc
-    * repeating its OWN passage counts too: its first occurrence is the
-    * canonical one, the repeats are non-canonical — self-boilerplate is
-    * exactly what the repetition literature screens). Passage-level text
-    * REWRITING (excising the repeated span) is deliberately not this
-    * operator: it changes document bytes, which belongs to a transform
-    * stage, not a filter.
+  /** Repeated-passage dedup APPLIED at doc granularity: a doc owning at
+    * least `minDupWindows` non-canonical duplicated windows
+    * ([[FingerprintScreen.nonCanonical]]) is dropped. Keep-first semantics
+    * at the passage level — the doc holding a passage's first occurrence
+    * survives, later docs built from already-seen passages go.
+    * Passage-level text REWRITING is deliberately not this operator
+    * ([[stripDuplicatePassages]]): it changes document bytes, which belongs
+    * to a transform stage, not a filter.
     *
-    * Scale: the fingerprint exchange of [[passageFingerprints]] plus a
-    * row_number within the fp hash partitions (sort is within-partition,
-    * no range exchange), one O(duplicated windows) doc-keyed aggregate,
-    * and a key-equality left-anti join (never broadcast-forced).
+    * Scale: the fingerprint exchange and within-partition row_number of
+    * [[FingerprintScreen.nonCanonical]], one O(duplicated windows)
+    * doc-keyed aggregate, and a key-equality left-anti join (never
+    * broadcast-forced).
     */
   def dropPassageDups(spark: SparkSession, df: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", w: Int = 50,
       minDupWindows: Long = 1L): DataFrame = {
-    val byFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fp")).orderBy(col("doc_id"), col("pos"))
-    val losers = passageFingerprints(df, idCol, textCol, w)
-      .withColumn("_rk", row_number().over(byFp))
-      .filter(col("_rk") > 1) // rk > 1 implies the fp occurs >= 2 times
+    val losers = FingerprintScreen.nonCanonical(Passage(w), df, idCol, textCol)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("_ndup"))
       .filter(col("_ndup") >= minDupWindows)
       .select(col("doc_id").as("_pl_id"))
     df.join(losers, df(idCol) === col("_pl_id"), "left_anti")
   }
 
-  /** Repeated-passage dedup applied as a TRANSFORM — the Lee et al.
-    * semantics proper: the tokens of every NON-CANONICAL duplicated window
-    * are EXCISED from their doc (the canonical occurrence — lexicographic
-    * min (doc_id, pos) — survives verbatim in its own doc), instead of
-    * [[dropPassageDups]]' whole-doc drop. Docs with no duplicated window
-    * keep their text BYTE-EXACT; rewritten docs are rebuilt from their
-    * surviving case-preserving tokens joined by single spaces (whitespace
-    * normalization is inherent to a token-level rewrite — this is a
-    * transform stage, documented as such). The fingerprint matching is
-    * case-insensitive ([[passageFingerprints]] lowercases), but
-    * lowercasing never changes token boundaries, so the lowered window
-    * positions index the raw tokens exactly.
-    *
-    * Scale shape: the [[passageFingerprints]] exchange + row_number as in
-    * [[dropPassageDups]], then the covered-index set — O(duplicated
-    * windows × w) ints, deduped and folded to ONE sorted int array per
-    * rewritten doc — rides a key-equality left join back to the corpus;
-    * the rebuild is a map-side higher-order filter (the per-token
-    * `array_contains` is linear in the doc's covered count — bounded by
-    * its token count). Corpus text never shuffles.
-    *
-    * Returns df's columns with `textCol` replaced.
-    */
+  /** [[FingerprintScreen.stripDuplicates]] over passages: the Lee et al. transform. */
   def stripDuplicatePassages(spark: SparkSession, df: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame = {
-    val byFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fp")).orderBy(col("doc_id"), col("pos"))
-    val nonCanonical = passageFingerprints(df, idCol, textCol, w)
-      .withColumn("_rk", row_number().over(byFp))
-      .filter(col("_rk") > 1)
-      .select(col("doc_id"), col("pos"))
-    exciseWindows(df, nonCanonical, idCol, textCol, w)
-  }
+      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
+    FingerprintScreen.stripDuplicates(Passage(w), df, idCol, textCol)
 
-  /** Excise the `w`-token windows listed in `windows` (doc_id, pos) from
-    * `df`: covered-index union folded to one sorted int array per
-    * rewritten doc, key-equality join, map-side rebuild from the raw
-    * case-preserving tokens (see [[stripDuplicatePassages]]'s contract:
-    * untouched docs byte-exact, rewritten docs single-space rebuilt).
-    */
-  private def exciseWindows(df: DataFrame, windows: DataFrame, idCol: String,
-      textCol: String, w: Int): DataFrame = {
-    val covered = windows
-      .select(col("doc_id").as("_strip_id"),
-        explode(sequence(col("pos"), col("pos") + (w - 1))).as("_ti"))
-      .distinct()
-      .groupBy(col("_strip_id"))
-      .agg(sort_array(collect_set(col("_ti"))).as("_cov"))
-    val rawToks = filter(split(coalesce(col(textCol), lit("")), "\\s+"),
-      t => length(t) > 0)
-    df.join(covered, df(idCol) === col("_strip_id"), "left")
-      .withColumn(textCol,
-        when(col("_cov").isNull, col(textCol))
-          .otherwise(concat_ws(" ",
-            filter(rawToks, (t, i) => not(array_contains(col("_cov"), i))))))
-      .drop("_strip_id", "_cov")
-  }
-
-  /** One row per DISTINCT fingerprint of a (doc_id, pos, fp) window set,
-    * carrying its canonical (lexicographic-min) occurrence — the compacted
-    * corpus-side artifact for incremental/streaming passage screens: a
-    * boilerplate fingerprint with millions of corpus occurrences joins as
-    * ONE row instead of amplifying every batch match by its corpus
-    * multiplicity.
-    */
-  def canonicalPassageFps(fps: DataFrame): DataFrame =
-    fps.groupBy(col("fp"))
-      .agg(min(struct(col("doc_id"), col("pos"))).as("_c"))
-      .select(col("fp"), col("_c.doc_id").as("corpus_id"), col("_c.pos").as("corpus_pos"))
-
-  /** Passage matches BETWEEN a batch and a corpus fingerprint set — the
-    * daily-ingest face of passage dedup ([[minhashPairsBetween]]'s
-    * analogue): `corpusFps` is a persisted [[passageFingerprints]] output
-    * (plain scalar parquet — doc_id, pos, fp — the passage analogue of
-    * the MinhashIndex banded artifact), so each ingest pays O(batch
-    * tokens) map work plus one key-equality join; the corpus is never
-    * re-fingerprinted. The corpus side is deduped to one row per
-    * fingerprint ([[canonicalPassageFps]]) BEFORE the join, so a
-    * million-occurrence boilerplate fingerprint cannot amplify the match
-    * stream. Returns one row per batch window whose fingerprint the
-    * corpus already holds: (doc_id, pos, fp, corpus_id, corpus_pos),
-    * unsorted.
-    */
+  /** [[FingerprintScreen.matchesAgainst]] over passages. */
   def passageMatchesAgainst(corpusFps: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
-    passageFingerprints(batch, idCol, textCol, w)
-      .join(canonicalPassageFps(corpusFps), Seq("fp"))
-      .select(col("doc_id"), col("pos"), col("fp"), col("corpus_id"), col("corpus_pos"))
+    FingerprintScreen.matchesAgainst(Passage(w), corpusFps, batch, idCol, textCol)
 
-  /** Incremental passage STRIP: excise from `batch` every window already
-    * present in the corpus fingerprint set (every corpus match is
-    * non-canonical by construction — the corpus came first). In-batch
-    * self-duplication is [[stripDuplicatePassages]]' job; a full daily
-    * ingest composes the two (corpus screen, then in-batch), then appends
-    * the surviving batch's [[passageFingerprints]] to the corpus artifact.
-    */
+  /** [[FingerprintScreen.stripAgainst]] over passages. */
   def stripPassagesAgainst(corpusFps: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
-    exciseWindows(batch,
-      passageMatchesAgainst(corpusFps, batch, idCol, textCol, w)
-        .select(col("doc_id"), col("pos")),
-      idCol, textCol, w)
+    FingerprintScreen.stripAgainst(Passage(w), corpusFps, batch, idCol, textCol)
 
   // ---- cross-doc exact line dedup (the CCNet/RefinedWeb line-level screen) ----
 
@@ -1109,104 +997,25 @@ object Dedup {
       .select(col("doc_id"), col("line_no"),
         graft.functions.GraftFunctions.fingerprint64(col("nl")).as("fp"))
 
-  /** Duplicated lines: every line whose normalized fingerprint occurs at
-    * least twice in the corpus (within OR across docs). Returns (doc_id,
-    * line_no, fp, n_occurrences), unsorted (operator contract).
-    *
-    * Scale shape (100 TB): ONE hash exchange keyed by the 8-byte
-    * fingerprint carrying (fp, doc_id, line_no) — line text never
-    * shuffles — and the count is a window aggregate over that exchange
-    * (the [[duplicatePassages]] shape). Line granularity is strictly
-    * cheaper than passages: one fingerprint per line instead of one per
-    * token position.
-    */
+  /** [[FingerprintScreen.duplicates]] over normalized lines. */
   def duplicateLines(spark: SparkSession, df: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    lineFingerprints(df, idCol, textCol)
-      .withColumn("n_occurrences", count(lit(1)).over(byFp))
-      .filter(col("n_occurrences") >= 2)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    FingerprintScreen.duplicates(Line, df, idCol, textCol)
 
-  /** Line dedup applied as a TRANSFORM: for every duplicated fingerprint
-    * the CANONICAL occurrence — lexicographic-min (doc_id, line_no) —
-    * survives verbatim; every other occurrence is EXCISED from its doc.
-    * Untouched docs keep their text byte-exact; rewritten docs are
-    * rebuilt from their surviving RAW lines joined by `\n` (surviving
-    * line bytes are preserved exactly — unlike the token-level passage
-    * rewrite, a line excision needs no re-tokenization).
-    *
-    * Scale: the [[lineFingerprints]] exchange + a within-partition
-    * row_number (no range exchange), one O(duplicated lines) doc-keyed
-    * fold to a sorted index array, and a key-equality left join back to
-    * the corpus; the rebuild is a map-side indexed filter.
-    */
+  /** [[FingerprintScreen.stripDuplicates]] over lines. */
   def stripDuplicateLines(spark: SparkSession, df: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val byFp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fp")).orderBy(col("doc_id"), col("line_no"))
-    val nonCanonical = lineFingerprints(df, idCol, textCol)
-      .withColumn("_rk", row_number().over(byFp))
-      .filter(col("_rk") > 1)
-      .select(col("doc_id"), col("line_no"))
-    exciseLines(df, nonCanonical, idCol, textCol)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    FingerprintScreen.stripDuplicates(Line, df, idCol, textCol)
 
-  /** Excise the 0-based line indexes listed in `lines` (doc_id, line_no)
-    * from `df`: per-doc sorted index array, key-equality join, map-side
-    * rebuild from the raw lines (see [[stripDuplicateLines]]'s contract).
-    */
-  private def exciseLines(df: DataFrame, lines: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val covered = lines
-      .select(col("doc_id").as("_lstrip_id"), col("line_no"))
-      .groupBy(col("_lstrip_id"))
-      .agg(sort_array(collect_set(col("line_no"))).as("_lcov"))
-    df.join(covered, df(idCol) === col("_lstrip_id"), "left")
-      .withColumn(textCol,
-        when(col("_lcov").isNull, col(textCol))
-          .otherwise(concat_ws("\n",
-            filter(split(coalesce(col(textCol), lit("")), "\n"),
-              (l, i) => not(array_contains(col("_lcov"), i))))))
-      .drop("_lstrip_id", "_lcov")
-  }
-
-  /** One row per DISTINCT line fingerprint with its canonical occurrence
-    * — the compacted corpus-side artifact for incremental line screens
-    * (the [[canonicalPassageFps]] analogue: a boilerplate line with
-    * millions of corpus occurrences joins as ONE row).
-    */
-  def canonicalLineFps(fps: DataFrame): DataFrame =
-    fps.groupBy(col("fp"))
-      .agg(min(struct(col("doc_id"), col("line_no"))).as("_c"))
-      .select(col("fp"), col("_c.doc_id").as("corpus_id"),
-        col("_c.line_no").as("corpus_line"))
-
-  /** Line matches BETWEEN a batch and a persisted corpus line-fingerprint
-    * set — the daily-ingest face: O(batch lines) map work plus one
-    * key-equality join against the fp-deduped corpus side; the corpus is
-    * never re-fingerprinted. Returns (doc_id, line_no, fp, corpus_id,
-    * corpus_line), unsorted.
-    */
+  /** [[FingerprintScreen.matchesAgainst]] over lines. */
   def lineMatchesAgainst(corpusFps: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    lineFingerprints(batch, idCol, textCol)
-      .join(canonicalLineFps(corpusFps), Seq("fp"))
-      .select(col("doc_id"), col("line_no"), col("fp"),
-        col("corpus_id"), col("corpus_line"))
+    FingerprintScreen.matchesAgainst(Line, corpusFps, batch, idCol, textCol)
 
-  /** Incremental line STRIP: excise from `batch` every line already held
-    * by the corpus fingerprint set (every corpus match is non-canonical —
-    * the corpus came first). In-batch self-duplication is
-    * [[stripDuplicateLines]]' job; a full ingest composes the two, then
-    * appends the surviving batch's [[lineFingerprints]].
-    */
+  /** [[FingerprintScreen.stripAgainst]] over lines. */
   def stripLinesAgainst(corpusFps: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    exciseLines(batch,
-      lineMatchesAgainst(corpusFps, batch, idCol, textCol)
-        .select(col("doc_id"), col("line_no")),
-      idCol, textCol)
+    FingerprintScreen.stripAgainst(Line, corpusFps, batch, idCol, textCol)
 
   /** Exact n-gram Jaccard for a candidate pair set (verification stage). */
   def ngramJaccard(a: String, b: String, n: Int = 3): Double = {

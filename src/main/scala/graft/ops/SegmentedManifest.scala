@@ -8,7 +8,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** The shared atomic-manifest machinery behind every persistable index
-  * artifact ([[MinhashIndex]], [[IvfIndex]], [[PassageIndex]]): parquet
+  * artifact ([[MinhashIndex]], [[IvfIndex]], and the [[ScreenIndex]] behind
+  * [[PassageIndex]] and [[LineIndex]]): parquet
   * segment directories land FIRST, one `index.json` (written to a temp
   * file, ATOMIC_MOVE'd into place) is the commit point, `segments` lists
   * the live data, `absorbed` records names compacted away so replayed

@@ -437,38 +437,52 @@ object StreamingPipeline {
       .select(col("doc_id"), col("eval_id"), col("ngram"))
   }
 
-  /** Streaming passage screen: every arriving doc's `w`-token windows
-    * matched against a STATIC corpus passage-fingerprint set — the
-    * streaming face of [[graft.ops.Dedup.passageMatchesAgainst]] (flag
-    * boilerplate passages the corpus already holds, as docs land).
-    * Fully STATELESS, the [[contaminationMatches]] shape: the doc side is
-    * a map-side fingerprint projection into a stream-static inner join on
-    * the 8-byte fingerprint — no watermark, no state store. The corpus
-    * side is deduped to one row per fingerprint and materialized ONCE at
-    * query start (stream-static re-evaluates the static plan per
-    * micro-batch; [[graft.ops.Materialize.iterative]]). Emits one row per
-    * matched (doc window, canonical corpus occurrence) in append mode;
-    * distinct rows equal the batch operator's output over the same docs
+  /** Streaming fingerprint screen: every arriving doc's units matched
+    * against a STATIC corpus fingerprint set — the streaming face of
+    * [[graft.ops.FingerprintScreen.matchesAgainst]] (flag boilerplate the
+    * corpus already holds, as docs land). Fully STATELESS, the
+    * [[contaminationMatches]] shape: the doc side is a map-side
+    * fingerprint projection into a stream-static inner join on the 8-byte
+    * fingerprint — no watermark, no state store. The corpus side is
+    * deduped to one row per fingerprint and materialized ONCE at query
+    * start (stream-static re-evaluates the static plan per micro-batch;
+    * [[graft.ops.Materialize.iterative]]). Emits one row per matched (doc
+    * unit, canonical corpus occurrence) in append mode; distinct rows
+    * equal the batch operator's output over the same docs
     * (StreamingSpec-pinned).
     */
-  def passageMatches(docs: DataFrame, corpusFps: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame = {
-    import graft.ops.{Dedup, Materialize}
-    val canon = Materialize.iterative(Dedup.canonicalPassageFps(corpusFps),
-      Materialize.fromEnv)
-    Dedup.passageFingerprints(docs, idCol, textCol, w)
-      .join(canon, Seq("fp"))
-      .select(col("doc_id"), col("pos"), col("fp"), col("corpus_id"), col("corpus_pos"))
+  def screenMatches(unit: graft.ops.ScreenUnit, docs: DataFrame, corpusFps: DataFrame,
+      idCol: String, textCol: String): DataFrame = {
+    import graft.ops.{FingerprintScreen, Materialize}
+    FingerprintScreen.matchesCanonical(unit,
+      Materialize.iterative(FingerprintScreen.canonical(unit, corpusFps),
+        Materialize.fromEnv),
+      docs, idCol, textCol)
   }
 
-  /** One passage-ingest micro-batch against the PERSISTED passage index —
-    * the transform analogue of [[ingestMicroBatch]]: the batch is stripped
-    * of every window the corpus already holds
-    * ([[graft.ops.Dedup.stripPassagesAgainst]]), then self-stripped within
-    * the batch ([[graft.ops.Dedup.stripDuplicatePassages]]); the rewritten
-    * rows land in `outDir/rewritten/<segment>`, and the REWRITTEN docs'
+  /** [[screenMatches]] over `w`-token passages. */
+  def passageMatches(docs: DataFrame, corpusFps: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
+    screenMatches(graft.ops.Passage(w), docs, corpusFps, idCol, textCol)
+
+  /** [[screenMatches]] over normalized lines. */
+  def lineMatches(docs: DataFrame, corpusFps: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    screenMatches(graft.ops.Line, docs, corpusFps, idCol, textCol)
+
+  /** One screen-ingest micro-batch against the PERSISTED fingerprint index
+    * at `indexDir`, in that index's unit — the transform analogue of
+    * [[ingestMicroBatch]]: the batch is stripped of every unit the corpus
+    * already holds ([[graft.ops.FingerprintScreen.stripAgainst]]), then
+    * self-stripped within the batch
+    * ([[graft.ops.FingerprintScreen.stripDuplicates]]); the rewritten rows
+    * land in `outDir/rewritten/<segment>`, and the REWRITTEN docs'
     * fingerprints (what the corpus now actually holds) append to the index
-    * — so later arrivals dedup against every passage kept before them.
+    * — so later arrivals dedup against every unit kept before them. For
+    * passages re-fingerprinting the rewritten text is required (new
+    * windows appear across excised spans); a line excision cannot create
+    * new lines, so for lines it is a single-source-of-truth choice: the
+    * index holds exactly what the written corpus holds.
     *
     * Idempotent under `segment` with the index append as the COMMIT POINT
     * (the [[ingestMicroBatch]] contract): a replay before the append
@@ -478,133 +492,77 @@ object StreamingPipeline {
     * occurrences now live in the index. `maxSegments > 0` bounds segment
     * growth via post-commit compact+vacuum. Single-writer per index dir.
     */
+  def ingestScreenMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
+      segment: String, idCol: String = "doc_id", textCol: String = "text",
+      maxSegments: Int = 0): Boolean = {
+    import graft.ops.{FingerprintScreen, ScreenIndex}
+    if (ScreenIndex.readMeta(indexDir).committed.contains(segment)) return false
+    val spark = batch.sparkSession
+    val idx = ScreenIndex.load(spark, indexDir)
+    val rewritten = FingerprintScreen.stripDuplicates(idx.unit,
+      FingerprintScreen.stripAgainst(idx.unit, idx.fps, batch, idCol, textCol),
+      idCol, textCol)
+    rewritten.write.mode("overwrite").parquet(s"$outDir/rewritten/$segment")
+    val delta = idx.unit.fingerprints(
+      spark.read.parquet(s"$outDir/rewritten/$segment"), idCol, textCol)
+    ScreenIndex.appendSegment(ScreenIndex(delta, idx.unit), indexDir, segment)
+    if (maxSegments > 0 && ScreenIndex.readMeta(indexDir).segments.size > maxSegments) {
+      ScreenIndex.compact(spark, indexDir)
+      ScreenIndex.vacuum(indexDir)
+    }
+    true
+  }
+
+  /** [[ingestScreenMicroBatch]] of a passage index. */
   def ingestPassageMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean = {
-    import graft.ops.{Dedup, PassageIndex}
-    if (PassageIndex.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    val idx = PassageIndex.load(spark, indexDir)
-    val rewritten = Dedup.stripDuplicatePassages(spark,
-      Dedup.stripPassagesAgainst(idx.fps, batch, idCol, textCol, idx.w),
-      idCol, textCol, idx.w)
-    rewritten.write.mode("overwrite").parquet(s"$outDir/rewritten/$segment")
-    val delta = Dedup.passageFingerprints(
-      spark.read.parquet(s"$outDir/rewritten/$segment"), idCol, textCol, idx.w)
-    PassageIndex.appendSegment(graft.ops.PassageIndex(delta, idx.w),
-      indexDir, segment)
-    if (maxSegments > 0 && PassageIndex.readMeta(indexDir).segments.size > maxSegments) {
-      PassageIndex.compact(spark, indexDir)
-      PassageIndex.vacuum(indexDir)
-    }
-    true
-  }
+      maxSegments: Int = 0): Boolean =
+    ingestScreenMicroBatch(batch, indexDir, outDir, segment, idCol, textCol, maxSegments)
 
-  /** Streaming passage APPLY — each arriving doc rewritten with every
-    * already-seen passage excised, the index growing with what survives:
-    * the streaming face of the Lee-et-al strip, mirroring
-    * [[dedupApplyStream]] (no Spark state store — the persisted
-    * [[graft.ops.PassageIndex]] IS the state, shared with the batch
-    * operators; micro-batch = ingest unit; earlier-kept passages win
-    * across batches, component-canonical within one).
-    *
-    * `indexDir` must hold an initialized index
-    * ([[graft.ops.PassageIndex.write]] of the corpus fingerprints — or of
-    * an empty frame to start cold).
-    */
-  def passageApplyStream(docs: DataFrame, indexDir: String, outDir: String,
-      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestPassageMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
-          idCol, textCol, maxSegments)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** Streaming line screen: every arriving doc's normalized lines matched
-    * against a STATIC corpus line-fingerprint set — the streaming face of
-    * [[graft.ops.Dedup.lineMatchesAgainst]] (flag boilerplate lines the
-    * corpus already holds, as docs land). Fully STATELESS, the
-    * [[passageMatches]] shape: map-side fingerprint projection into a
-    * stream-static inner join on the 8-byte fingerprint — no watermark,
-    * no state store; the corpus side is deduped to one row per
-    * fingerprint and materialized ONCE at query start.
-    */
-  def lineMatches(docs: DataFrame, corpusFps: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import graft.ops.{Dedup, Materialize}
-    val canon = Materialize.iterative(Dedup.canonicalLineFps(corpusFps),
-      Materialize.fromEnv)
-    Dedup.lineFingerprints(docs, idCol, textCol)
-      .join(canon, Seq("fp"))
-      .select(col("doc_id"), col("line_no"), col("fp"),
-        col("corpus_id"), col("corpus_line"))
-  }
-
-  /** One line-ingest micro-batch against the PERSISTED line index — the
-    * line analogue of [[ingestPassageMicroBatch]]: the batch is stripped
-    * of every line the corpus already holds
-    * ([[graft.ops.Dedup.stripLinesAgainst]]), then self-stripped within
-    * the batch ([[graft.ops.Dedup.stripDuplicateLines]]); the rewritten
-    * rows land in `outDir/rewritten/<segment>`, and the rewritten docs'
-    * line fingerprints append to the index. (A line excision cannot
-    * create NEW lines — unlike the passage rewrite — so fingerprinting
-    * the rewritten parquet is a single-source-of-truth choice, not a
-    * semantic necessity: the index holds exactly what the written corpus
-    * holds.)
-    *
-    * Idempotent under `segment` with the index append as the COMMIT POINT
-    * (the [[ingestMicroBatch]] contract); `maxSegments > 0` bounds
-    * segment growth via post-commit compact+vacuum. Single-writer per
-    * index dir.
-    */
+  /** [[ingestScreenMicroBatch]] of a line index. */
   def ingestLineMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean = {
-    import graft.ops.{Dedup, LineIndex}
-    if (LineIndex.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    val idx = LineIndex.load(spark, indexDir)
-    val rewritten = Dedup.stripDuplicateLines(spark,
-      Dedup.stripLinesAgainst(idx.fps, batch, idCol, textCol), idCol, textCol)
-    rewritten.write.mode("overwrite").parquet(s"$outDir/rewritten/$segment")
-    val delta = Dedup.lineFingerprints(
-      spark.read.parquet(s"$outDir/rewritten/$segment"), idCol, textCol)
-    LineIndex.appendSegment(graft.ops.LineIndex(delta), indexDir, segment)
-    if (maxSegments > 0 && LineIndex.readMeta(indexDir).segments.size > maxSegments) {
-      LineIndex.compact(spark, indexDir)
-      LineIndex.vacuum(indexDir)
-    }
-    true
-  }
+      maxSegments: Int = 0): Boolean =
+    ingestScreenMicroBatch(batch, indexDir, outDir, segment, idCol, textCol, maxSegments)
 
-  /** Streaming line APPLY — each arriving doc rewritten with every
-    * already-seen boilerplate line excised, the index growing with what
-    * survives: the streaming face of the CCNet line screen, mirroring
-    * [[passageApplyStream]] (no Spark state store — the persisted
-    * [[graft.ops.LineIndex]] IS the state, shared with the batch
-    * operators; earlier-kept lines win across batches).
+  /** Streaming screen APPLY — each arriving doc rewritten with every
+    * already-seen unit excised, the index growing with what survives: the
+    * streaming face of the strip transforms (Lee et al. passages, CCNet
+    * lines), mirroring [[dedupApplyStream]] (no Spark state store — the
+    * persisted [[graft.ops.ScreenIndex]] IS the state, shared with the
+    * batch operators; micro-batch = ingest unit; earlier-kept units win
+    * across batches, canonical within one). The unit is the index's.
     *
     * `indexDir` must hold an initialized index
-    * ([[graft.ops.LineIndex.write]] of the corpus fingerprints — or of an
-    * empty frame to start cold).
+    * ([[graft.ops.ScreenIndex.write]] of the corpus fingerprints — or of
+    * an empty frame to start cold).
     */
-  def lineApplyStream(docs: DataFrame, indexDir: String, outDir: String,
+  def screenApplyStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
       availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestLineMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
+        ingestScreenMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
           idCol, textCol, maxSegments)
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
+
+  /** [[screenApplyStream]] over a passage index. */
+  def passageApplyStream(docs: DataFrame, indexDir: String, outDir: String,
+      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
+    screenApplyStream(docs, indexDir, outDir, checkpointDir, idCol, textCol,
+      availableNow, maxSegments)
+
+  /** [[screenApplyStream]] over a line index. */
+  def lineApplyStream(docs: DataFrame, indexDir: String, outDir: String,
+      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
+    screenApplyStream(docs, indexDir, outDir, checkpointDir, idCol, textCol,
+      availableNow, maxSegments)
 
   /** Streaming decontamination APPLY — the kept/flagged verdict per
     * arriving doc ([[contaminationMatches]] stops at match events; this

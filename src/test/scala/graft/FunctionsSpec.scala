@@ -71,6 +71,20 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("passageFps and the n-gram screen reject n/w <= 0 up front") {
+    // w < 0 indexed out of bounds inside the kernel and w = 0 emitted n+1
+    // garbage fingerprints; both now fail when the column is built
+    import spark.implicits._
+    import graft.functions.DedupFunctions
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val evalNgrams = Seq((9L, "a b")).toDF("eval_id", "ngram")
+    for (bad <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](DedupFunctions.passageFps(col("toks"), bad))
+      intercept[IllegalArgumentException](
+        graft.ops.Dedup.ngramContaminationAgainst(docs, evalNgrams, n = bad))
+    }
+  }
+
   test("minhashSignature equals the per-shingle-string reference formula") {
     // round 8 folds the FNV base hash over token chars without building
     // the joined shingle string — pin value-identity against a literal

@@ -561,15 +561,15 @@ class OpsSpec extends AnyFunSuite {
 
   test("passage index: round-trip, idempotent append, compaction, param guard") {
     import spark.implicits._
-    import graft.ops.PassageIndex
+    import graft.ops.{Passage, PassageIndex, ScreenIndex}
     val a = Seq((1L, "one two three four five six seven")).toDF("doc_id", "text")
     val b = Seq((2L, "eight nine ten eleven twelve thirteen")).toDF("doc_id", "text")
-    def rows(idx: PassageIndex) =
+    def rows(idx: ScreenIndex) =
       idx.fps.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val dir = java.nio.file.Files.createTempDirectory("pfp_idx").toString
     PassageIndex.write(PassageIndex(Dedup.passageFingerprints(a, w = 5), 5), dir)
     val loaded = PassageIndex.load(spark, dir)
-    assert(loaded.w == 5 && rows(loaded) == rows(
+    assert(loaded.unit == Passage(5) && rows(loaded) == rows(
       PassageIndex(Dedup.passageFingerprints(a, w = 5), 5)))
     val delta = PassageIndex(Dedup.passageFingerprints(b, w = 5), 5)
     assert(PassageIndex.appendSegment(delta, dir, "day_1"))
@@ -597,10 +597,10 @@ class OpsSpec extends AnyFunSuite {
 
   test("line index: round-trip, idempotent append, compaction, vacuum") {
     import spark.implicits._
-    import graft.ops.LineIndex
+    import graft.ops.{LineIndex, ScreenIndex}
     val a = Seq((1L, "first corpus line.\nsecond corpus line.")).toDF("doc_id", "text")
     val b = Seq((2L, "a later ingest line.")).toDF("doc_id", "text")
-    def rows(idx: LineIndex) =
+    def rows(idx: ScreenIndex) =
       idx.fps.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val dir = java.nio.file.Files.createTempDirectory("lfp_idx").toString
     LineIndex.write(LineIndex(Dedup.lineFingerprints(a)), dir)
@@ -620,6 +620,51 @@ class OpsSpec extends AnyFunSuite {
       "replay after compaction must stay a no-op")
     assert(LineIndex.vacuum(dir).toSet == Set("fps/base", "fps/day_1"))
     assert(rows(LineIndex.load(spark, dir)) == before)
+  }
+
+  test("index manifests: passage and line index.json bytes are pinned") {
+    // index directories written by earlier versions must keep loading and
+    // ingesting: these bytes are the on-disk format contract of both units
+    import spark.implicits._
+    import graft.ops.{LineIndex, PassageIndex}
+    def manifest(dir: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "index.json")), java.nio.charset.StandardCharsets.UTF_8)
+    val a = Seq((1L, "one two three four five six\nseven eight")).toDF("doc_id", "text")
+    val b = Seq((2L, "nine ten eleven twelve thirteen")).toDF("doc_id", "text")
+    val p = java.nio.file.Files.createTempDirectory("pfp_manifest").toString
+    PassageIndex.write(PassageIndex(Dedup.passageFingerprints(a, w = 5), 5), p)
+    assert(manifest(p) == "{\n  \"format\" : 1,\n  \"w\" : 5,\n  \"segments\" : [ \"base\" ],\n  \"absorbed\" : [ ]\n}")
+    PassageIndex.appendSegment(PassageIndex(Dedup.passageFingerprints(b, w = 5), 5), p, "day_1")
+    assert(manifest(p) == "{\n  \"format\" : 1,\n  \"w\" : 5,\n  \"segments\" : [ \"base\", \"day_1\" ],\n  \"absorbed\" : [ ]\n}")
+    PassageIndex.compact(spark, p)
+    assert(manifest(p) == "{\n  \"format\" : 1,\n  \"w\" : 5,\n  \"segments\" : [ \"compacted_0\" ],\n  \"absorbed\" : [ \"base\", \"day_1\" ]\n}")
+    val l = java.nio.file.Files.createTempDirectory("lfp_manifest").toString
+    LineIndex.write(LineIndex(Dedup.lineFingerprints(a)), l)
+    assert(manifest(l) == "{\n  \"format\" : 1,\n  \"segments\" : [ \"base\" ],\n  \"absorbed\" : [ ]\n}")
+    LineIndex.appendSegment(LineIndex(Dedup.lineFingerprints(b)), l, "day_1")
+    assert(manifest(l) == "{\n  \"format\" : 1,\n  \"segments\" : [ \"base\", \"day_1\" ],\n  \"absorbed\" : [ ]\n}")
+    LineIndex.compact(spark, l)
+    assert(manifest(l) == "{\n  \"format\" : 1,\n  \"segments\" : [ \"compacted_0\" ],\n  \"absorbed\" : [ \"base\", \"day_1\" ]\n}")
+  }
+
+  test("passage index readMeta rejects a line index directory") {
+    import spark.implicits._
+    import graft.ops.{LineIndex, PassageIndex}
+    val dir = java.nio.file.Files.createTempDirectory("lfp_kind").toString
+    LineIndex.write(LineIndex(Dedup.lineFingerprints(
+      Seq((1L, "a corpus line.")).toDF("doc_id", "text"))), dir)
+    val e = intercept[IllegalArgumentException](PassageIndex.readMeta(dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("line"), e.getMessage)
+  }
+
+  test("line index readMeta rejects a passage index directory") {
+    import spark.implicits._
+    import graft.ops.{LineIndex, PassageIndex}
+    val dir = java.nio.file.Files.createTempDirectory("pfp_kind").toString
+    PassageIndex.write(PassageIndex(Dedup.passageFingerprints(
+      Seq((1L, "one two three four five six")).toDF("doc_id", "text"), w = 5), 5), dir)
+    val e = intercept[IllegalArgumentException](LineIndex.readMeta(dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("passage"), e.getMessage)
   }
 
   test("incremental passage screen matches and strips against a corpus fp set") {

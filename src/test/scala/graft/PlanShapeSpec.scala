@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
@@ -272,6 +274,51 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(projStr.contains("graft_fingerprint64"), "native fp expression in-plan")
     assert(!projStr.contains("DeserializeToObject"))
+  }
+
+  test("screen matchesAgainst: the corpus side is one row per fp beneath the join") {
+    // both units run one implementation: the corpus fingerprint set must
+    // collapse to one canonical row per fp BEFORE the join, so a
+    // boilerplate fp with many corpus occurrences cannot amplify the matches
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val corpus = docs.filter(pmod(col("doc_id"), lit(2)) =!= 0)
+    val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+    for ((unit, df) <- Seq(
+        "passage" -> Dedup.passageMatchesAgainst(
+          Dedup.passageFingerprints(corpus, w = 25), batch, w = 25),
+        "line" -> Dedup.lineMatchesAgainst(Dedup.lineFingerprints(corpus), batch))) {
+      df.collect() // finalize AQE
+      val joins = nodes(df).collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+      assert(joins.size == 1, s"$unit: expected one fp join: $joins")
+      val fpAggs = joins.head.children.flatMap(nodes).collect {
+        case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("fp") => a
+      }
+      assert(fpAggs.nonEmpty, s"$unit: corpus side must aggregate to one row per fp " +
+        s"beneath the join: ${joins.head}")
+    }
+  }
+
+  test("screen in-batch strip: exactly one fp-keyed exchange per unit") {
+    // the canonical-occurrence selection rides ONE hash exchange on fp (its
+    // row_number sorts within the partitions); every other exchange is
+    // doc-keyed. A shared trailing line keeps the strip non-vacuous: AQE
+    // prunes the whole fp side of the join when nothing is duplicated
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .withColumn("text", concat(col("text"), lit("\nSubscribe to our newsletter today!")))
+    for ((unit, df) <- Seq(
+        "passage" -> Dedup.stripDuplicatePassages(spark, docs, w = 25),
+        "line" -> Dedup.stripDuplicateLines(spark, docs))) {
+      df.collect() // finalize AQE
+      val fpKeyed = nodes(df).collect {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("fp")
+          case _ => false
+        }) => e
+      }
+      assert(fpKeyed.size == 1, s"$unit: expected one fp-keyed exchange: $fpKeyed")
+    }
   }
 
   test("frequency quality: top-k vocabulary broadcasts into the scoring join") {
